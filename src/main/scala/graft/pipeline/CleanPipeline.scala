@@ -240,10 +240,8 @@ object CleanPipeline {
       nBuckets: Int = 64): Unit = {
     ParagraphDedup.writeParagraphIndex(index.para, s"$dir/para", nBuckets)
     Dedup.writeExactSubstrIndex(index.substr, s"$dir/substr", nBuckets)
-    val spark = index.para.units.sparkSession
-    import spark.implicits._
-    Seq(index.joiner).toDF("joiner")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    IndexStore.writeMeta(index.para.units.sparkSession, s"$dir/meta")(
+      "joiner" -> index.joiner)
   }
 
   /** Reload a disk-persisted [[writeCleanIndex]] layout; each half caches
@@ -254,7 +252,7 @@ object CleanPipeline {
     CleanIndex(
       ParagraphDedup.readParagraphIndex(spark, s"$dir/para"),
       Dedup.readExactSubstrIndex(spark, s"$dir/substr"),
-      spark.read.parquet(s"$dir/meta").head.getAs[String]("joiner"))
+      IndexStore.readMeta(spark, s"$dir/meta").getAs[String]("joiner"))
 
   /** INCREMENTAL composed cleanup — the daily-crawl twin of
     * [[cleanCorpus]]: the increment is paragraph-deduped against the unit
@@ -280,15 +278,24 @@ object CleanPipeline {
       textCol: String = "text"): (DataFrame, DataFrame) = {
     // increment-sized, consumed twice by stage 2 (substrate + emission)
     // and once more by a folding caller: checkpoint once — cheap at any
-    // scale, same rationale as the batch form's materializeIntermediate.
-    // The kept-unit emission rides the persisted increment substrate
-    // (§6 derive-once — the checkpoint right here is what makes it eager)
-    val (kept, release) = ParagraphDedup.incrementalDedupUnitsOnSubstrate(
-      incoming, index.para, idCol, textCol)
-    val cleanedInc =
-      try rejoinKept(kept, index.joiner).localCheckpoint()
-      finally release()
+    // scale, same rationale as the batch form's materializeIntermediate
+    val cleanedInc = cleanIncrement(incoming, index.para, index.joiner,
+      idCol, textCol)
     (Dedup.incrementalRemoveDupSpansExact(cleanedInc, index.substr), cleanedInc)
+  }
+
+  /** Stage 1 of both incremental chains: the increment paragraph-probed
+    * against `para` (watermark enforced there) and canonically re-joined,
+    * CHECKPOINTED. The kept-unit emission rides the persisted increment
+    * substrate (§6 derive-once — the checkpoint is what makes it eager).
+    */
+  private def cleanIncrement(incoming: DataFrame,
+      para: ParagraphDedup.ParagraphIndex, joiner: String, idCol: String,
+      textCol: String): DataFrame = {
+    val (kept, release) = ParagraphDedup.incrementalDedupUnitsOnSubstrate(
+      incoming, para, idCol, textCol)
+    try rejoinKept(kept, joiner).localCheckpoint()
+    finally release()
   }
 
   /** Fold a shipped increment into both halves: the paragraph index folds
@@ -424,30 +431,25 @@ object CleanPipeline {
     ParagraphDedup.writeParagraphIndex(index.para, s"$dir/para", nBuckets)
     Dedup.writeNearDupIndex(index.nearDup, s"$dir/neardup", nBuckets)
     Dedup.writeExactSubstrIndex(index.substr, s"$dir/substr", nBuckets)
-    index.corpusFps.repartition(nBuckets, col("fp"))
-      .write.mode("overwrite").parquet(s"$dir/fps")
-    val spark = index.corpusFps.sparkSession
-    import spark.implicits._
-    Seq((index.joiner, index.threshold)).toDF("joiner", "threshold")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    IndexStore.writeTable(index.corpusFps, s"$dir/fps", Seq("fp"), nBuckets)
+    IndexStore.writeMeta(index.corpusFps.sparkSession, s"$dir/meta")(
+      "joiner" -> index.joiner, "threshold" -> index.threshold)
   }
 
   /** Reload a disk-persisted index ([[writeFullCleanIndex]]) in a fresh
     * session; every half persists lazily, so the first probe pays the
-    * parquet scans.
+    * parquet scans. The fp set caches clustered on fp, so each
+    * increment's anti-join streams it instead of re-exchanging it per
+    * probe.
     */
   def readFullCleanIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): FullCleanIndex = {
-    val meta = spark.read.parquet(s"$dir/meta").head
+    val meta = IndexStore.readMeta(spark, s"$dir/meta")
     FullCleanIndex(
       ParagraphDedup.readParagraphIndex(spark, s"$dir/para"),
       Dedup.readNearDupIndex(spark, s"$dir/neardup"),
       Dedup.readExactSubstrIndex(spark, s"$dir/substr"),
-      // clustered on fp before caching so each increment's anti-join
-      // streams the corpus fp set instead of re-exchanging it per probe
-      spark.read.parquet(s"$dir/fps")
-        .repartition(spark.sessionState.conf.numShufflePartitions, col("fp"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      IndexStore.readTable(spark, s"$dir/fps", Seq("fp")),
       meta.getAs[String]("joiner"), meta.getAs[Double]("threshold"))
   }
 
@@ -461,14 +463,9 @@ object CleanPipeline {
 
   private[graft] def fullCleanProbe(incoming: DataFrame, index: FullCleanIndex,
       idCol: String, textCol: String): FullCleanProbe = {
-    // stage 1: paragraph-probe + canonical re-join (watermark enforced by
-    // the paragraph probe); checkpointed — consumed by the rep collapse.
-    // Emission rides the persisted increment substrate (§6 derive-once)
-    val (kept, release) = ParagraphDedup.incrementalDedupUnitsOnSubstrate(
-      incoming, index.para, idCol, textCol)
-    val cleanedInc =
-      try rejoinKept(kept, index.joiner).localCheckpoint()
-      finally release()
+    // stage 1, checkpointed — consumed by the rep collapse
+    val cleanedInc = cleanIncrement(incoming, index.para, index.joiner,
+      idCol, textCol)
     // stage 2a: exact-dup collapse WITHIN the increment (min-id rep)
     val incReps = Dedup.collapseReps(cleanedInc).localCheckpoint()
     // exact contact with ANY indexed rep — covers documents shorter than

@@ -400,49 +400,36 @@ object Dedup {
     NearDupIndex(store, bands, index.k, index.nHashes, index.rowsPerBand, wm)
   }
 
-  /** Persist a [[NearDupIndex]] to `dir` as parquet — the cross-restart
-    * half of the daily-crawl amortization story: `doc_store/` plain,
-    * `bands/` clustered into `nBuckets` files by (band, bh) (on a real
-    * warehouse this is a bucketed table so the probe equi-join co-locates
-    * against the index without shuffling it; plain parquet keeps the
-    * clustering physical so bucket-local reads stay cheap), `meta/`
-    * pinning the signature parameters so a reloaded probe can never hash
-    * with a mismatched scheme.
+  /** Persist a [[NearDupIndex]] to `dir` through [[IndexStore]] — the
+    * cross-restart half of the daily-crawl amortization story:
+    * `doc_store/` plain, `bands/` clustered into `nBuckets` files by
+    * (band, bh), `meta/` pinning the signature parameters (a reloaded
+    * probe can never hash with a mismatched scheme) and the
+    * [[IdContract]] watermark.
     */
   def writeNearDupIndex(index: NearDupIndex, dir: String,
       nBuckets: Int = 64): Unit = {
-    index.docStore.write.mode("overwrite").parquet(s"$dir/doc_store")
-    index.bands.repartition(nBuckets, col("band"), col("bh"))
-      .write.mode("overwrite").parquet(s"$dir/bands")
-    val spark = index.docStore.sparkSession
-    import spark.implicits._
-    Seq((index.k, index.nHashes, index.rowsPerBand, index.maxDocId))
-      .toDF("k", "n_hashes", "rows_per_band", "max_doc_id")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    IndexStore.writeTable(index.docStore, s"$dir/doc_store", Nil, nBuckets)
+    IndexStore.writeTable(index.bands, s"$dir/bands", Seq("band", "bh"), nBuckets)
+    IndexStore.writeMeta(index.docStore.sparkSession, s"$dir/meta")(
+      "k" -> index.k, "n_hashes" -> index.nHashes,
+      "rows_per_band" -> index.rowsPerBand, "max_doc_id" -> index.maxDocId)
   }
 
   /** Reload a disk-persisted index ([[writeNearDupIndex]]) in a fresh
     * session. Both frames persist MEMORY_AND_DISK lazily: the FIRST probe
     * pays the parquet scan (the cold cost `IncrementalProbe` measures as
-    * `cold_probe_sec`), steady-state probes run against the cache.
+    * `cold_probe_sec`), steady-state probes run against the cache. The
+    * doc store's joins are candidate-driven (small side broadcasts), so it
+    * caches as scanned; the bands table is probed on (band, bh) every
+    * increment, so it caches clustered on that key.
     */
   def readNearDupIndex(spark: SparkSession, dir: String): NearDupIndex = {
-    val meta = spark.read.parquet(s"$dir/meta").head
-    NearDupIndex(
-      // docStore joins are candidate-driven (small side broadcasts), so
-      // the store caches as scanned; the bands table is probed on
-      // (band, bh) every increment — cluster it into the cache once
-      spark.read.parquet(s"$dir/doc_store")
-        .persist(StorageLevel.MEMORY_AND_DISK),
-      spark.read.parquet(s"$dir/bands")
-        .repartition(spark.sessionState.conf.numShufflePartitions,
-          col("band"), col("bh"))
-        .persist(StorageLevel.MEMORY_AND_DISK),
+    val meta = IndexStore.readMeta(spark, s"$dir/meta")
+    NearDupIndex(IndexStore.readTable(spark, s"$dir/doc_store", Nil),
+      IndexStore.readTable(spark, s"$dir/bands", Seq("band", "bh")),
       meta.getAs[Int]("k"), meta.getAs[Int]("n_hashes"),
-      meta.getAs[Int]("rows_per_band"),
-      if (meta.schema.fieldNames.contains("max_doc_id"))
-        meta.getAs[Long]("max_doc_id")
-      else IdContract.Unwatermarked)
+      meta.getAs[Int]("rows_per_band"), IndexStore.watermark(meta))
   }
 
   /** Verified near-dup pairs WITHIN a prebuilt index — corpus-internal
@@ -1392,28 +1379,43 @@ object Dedup {
   private[graft] def exactSubstrFrames(docs: DataFrame, minLen: Int,
       idCol: String, textCol: String, keepFirst: Boolean): RemoveSpanFrames = {
     require(minLen >= 1, s"minLen must be >= 1, got $minLen")
-    val base = docs
-      .select(col(idCol).as("doc_id"), TextPipeline.tokens(col(textCol)).as("toks"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val grams = base
-      .select(col("doc_id"),
-        posexplode(graft.functions.RollingGramHashes
-          .rollingGramHashes(col("toks"), minLen)))
-      .select(col("doc_id"), col("pos").cast("long").as("i"),
-        col("col.h1").as("g1"), col("col.h2").as("g2"))
     // >= 2 occurrences ANYWHERE (within-doc repeats count); keeper = the
     // first occurrence in (doc_id, position) order. min(struct) is
     // map-side combinable, and the dup set is a small corpus fraction, so
     // the join back broadcasts under AQE.
-    val dupSet = grams
-      .groupBy("g1", "g2")
-      .agg(count(lit(1)).as("nocc"),
-        min(struct(col("doc_id"), col("i"))).as("keeper"))
-      .filter(col("nocc") >= 2)
-      .select("g1", "g2", "keeper")
-    val joined = grams.join(dupSet, Seq("g1", "g2"))
+    gramCutFrames(docs, minLen, idCol, textCol, keepFirst)(grams =>
+      KeyedIndex.dups(KeyedIndex.aggregate(grams, GramKey, gramKeeper), GramKey))
+  }
+
+  private val GramKey = Seq("g1", "g2")
+  private def gramKeeper: Column = struct(col("doc_id"), col("i"))
+
+  /** `(doc_id, i, g1, g2)`: every `minLen`-token window of `toks`, keyed by
+    * its two rolled 64-bit hashes.
+    */
+  private def gramRows(docs: DataFrame, docId: Column, toks: Column,
+      minLen: Int): DataFrame =
+    docs
+      .select(docId, posexplode(graft.functions.RollingGramHashes
+        .rollingGramHashes(toks, minLen)))
+      .select(col("doc_id"), col("pos").cast("long").as("i"),
+        col("col.h1").as("g1"), col("col.h2").as("g2"))
+
+  /** The exact family's shared cut derivation: persisted token substrate,
+    * its gram windows, the caller's `(g1, g2, keeper)` dup set over them,
+    * and the per-doc merged cut islands of the dup windows (all of them,
+    * or only non-keepers under `keepFirst`).
+    */
+  private def gramCutFrames(docs: DataFrame, minLen: Int, idCol: String,
+      textCol: String, keepFirst: Boolean)(
+      dupSetOf: DataFrame => DataFrame): RemoveSpanFrames = {
+    val base = docs
+      .select(col(idCol).as("doc_id"), TextPipeline.tokens(col(textCol)).as("toks"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val grams = gramRows(base, col("doc_id"), col("toks"), minLen)
+    val joined = grams.join(dupSetOf(grams), GramKey)
     val cutWins =
-      if (keepFirst) joined.filter(struct(col("doc_id"), col("i")) =!= col("keeper"))
+      if (keepFirst) joined.filter(gramKeeper =!= col("keeper"))
       else joined
     // every window has length exactly minLen, so every merged island
     // already clears the >= minLen policy — islandIntervals needs no
@@ -1490,21 +1492,15 @@ object Dedup {
     def unpersist(): Unit = grams.unpersist(blocking = false)
   }
 
-  /** The per-gram `(nocc, keeper)` aggregate of one corpus side — the
-    * map-side-combinable build step shared by [[buildExactSubstrIndex]],
-    * [[updateExactSubstrIndex]] and the probe's increment-side aggregate.
+  /** The per-gram `(nocc, keeper)` aggregate ([[KeyedIndex]]) of one
+    * corpus side — the map-side-combinable build step shared by
+    * [[buildExactSubstrIndex]], [[updateExactSubstrIndex]] and the
+    * segmented folds.
     */
   private def exactGramAgg(docs: DataFrame, minLen: Int,
       idCol: String, textCol: String): DataFrame =
-    docs
-      .select(col(idCol).as("doc_id"),
-        posexplode(graft.functions.RollingGramHashes
-          .rollingGramHashes(TextPipeline.tokens(col(textCol)), minLen)))
-      .select(col("doc_id"), col("pos").cast("long").as("i"),
-        col("col.h1").as("g1"), col("col.h2").as("g2"))
-      .groupBy("g1", "g2")
-      .agg(count(lit(1)).as("nocc"),
-        min(struct(col("doc_id"), col("i"))).as("keeper"))
+    KeyedIndex.aggregate(gramRows(docs, col(idCol).as("doc_id"),
+      TextPipeline.tokens(col(textCol)), minLen), GramKey, gramKeeper)
 
   /** Build the corpus-side [[ExactSubstrIndex]] once; probe it per
     * increment with [[incrementalRemoveDupSpansExact]], fold each shipped
@@ -1543,53 +1539,30 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text"): ExactSubstrIndex = {
     val wm = IdContract.requireAboveAndAdvance(incoming, idCol,
       index.maxDocId, "updateExactSubstrIndex")
-    ExactSubstrIndex(
-      index.grams
-        .unionByName(exactGramAgg(incoming, index.minLen, idCol, textCol))
-        .groupBy("g1", "g2")
-        .agg(sum(col("nocc")).as("nocc"), min(col("keeper")).as("keeper"))
-        .persist(StorageLevel.MEMORY_AND_DISK),
+    ExactSubstrIndex(KeyedIndex.fold(Seq(index.grams,
+      exactGramAgg(incoming, index.minLen, idCol, textCol)), GramKey),
       index.minLen, wm)
   }
 
-  /** Persist an [[ExactSubstrIndex]] to `dir` as parquet — `grams/`
-    * clustered into `nBuckets` files by `(g1, g2)` (a bucketed table on a
-    * real warehouse, so the probe equi-join co-locates against the index
-    * without shuffling it), `meta/` pinning `minLen` so a reloaded probe
-    * can never hash with a mismatched window length.
+  /** Persist an [[ExactSubstrIndex]] to `dir` through [[IndexStore]] —
+    * `grams/` clustered into `nBuckets` files by `(g1, g2)`, `meta/`
+    * pinning `minLen` (a reloaded probe can never hash with a mismatched
+    * window length) and the [[IdContract]] watermark.
     */
   def writeExactSubstrIndex(index: ExactSubstrIndex, dir: String,
       nBuckets: Int = 64): Unit = {
-    index.grams.repartition(nBuckets, col("g1"), col("g2"))
-      .write.mode("overwrite").parquet(s"$dir/grams")
-    val spark = index.grams.sparkSession
-    import spark.implicits._
-    Seq((index.minLen, index.maxDocId)).toDF("min_len", "max_doc_id")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    IndexStore.writeTable(index.grams, s"$dir/grams", GramKey, nBuckets)
+    IndexStore.writeMeta(index.grams.sparkSession, s"$dir/meta")(
+      "min_len" -> index.minLen, "max_doc_id" -> index.maxDocId)
   }
 
   /** Reload a disk-persisted index ([[writeExactSubstrIndex]]) in a fresh
-    * session; persists lazily, so the first probe pays the parquet scan.
-    * The [[IdContract]] watermark round-trips with the index (pre-
-    * watermark dirs reload unwatermarked).
+    * session; the gram table caches lazily, clustered on `(g1, g2)`.
     */
   def readExactSubstrIndex(spark: SparkSession, dir: String): ExactSubstrIndex = {
-    val meta = spark.read.parquet(s"$dir/meta").head
-    ExactSubstrIndex(
-      // repartition on the probe key BEFORE caching: a raw parquet scan
-      // caches with unknown partitioning, so every probe join would
-      // re-exchange the corpus-sized gram table — clustering into the
-      // cache makes the exchange a one-time warm-up cost and every probe
-      // streams the cached store (the partitioning fold-built indexes
-      // already have)
-      spark.read.parquet(s"$dir/grams")
-        .repartition(spark.sessionState.conf.numShufflePartitions,
-          col("g1"), col("g2"))
-        .persist(StorageLevel.MEMORY_AND_DISK),
-      meta.getAs[Int]("min_len"),
-      if (meta.schema.fieldNames.contains("max_doc_id"))
-        meta.getAs[Long]("max_doc_id")
-      else IdContract.Unwatermarked)
+    val meta = IndexStore.readMeta(spark, s"$dir/meta")
+    ExactSubstrIndex(IndexStore.readTable(spark, s"$dir/grams", GramKey),
+      meta.getAs[Int]("min_len"), IndexStore.watermark(meta))
   }
 
   /** INCREMENTAL exact duplicated-substring removal — the daily-crawl twin
@@ -1625,11 +1598,22 @@ object Dedup {
   def incrementalRemoveDupSpansExact(incoming: DataFrame,
       index: ExactSubstrIndex, idCol: String = "doc_id",
       textCol: String = "text", keepFirst: Boolean = true,
-      emitOriginal: Boolean = false): DataFrame = {
-    IdContract.requireAbove(incoming, idCol, index.maxDocId,
-      "incrementalRemoveDupSpansExact")
-    val f = incrementalExactSubstrFrames(incoming, index, idCol, textCol,
-      keepFirst)
+      emitOriginal: Boolean = false): DataFrame =
+    removeAgainstSegments(incoming, Seq(index.grams), index.minLen,
+      index.maxDocId, "incrementalRemoveDupSpansExact", idCol, textCol,
+      keepFirst, emitOriginal)
+
+  /** The probe of both index forms: watermark check, the segments' union
+    * verdict ([[incrementalExactSubstrFramesOver]]), checkpointed cuts and
+    * the lazy piece emission.
+    */
+  private def removeAgainstSegments(incoming: DataFrame,
+      segments: Seq[DataFrame], minLen: Int, maxDocId: Long, what: String,
+      idCol: String, textCol: String, keepFirst: Boolean,
+      emitOriginal: Boolean): DataFrame = {
+    IdContract.requireAbove(incoming, idCol, maxDocId, what)
+    val f = incrementalExactSubstrFramesOver(incoming, segments, minLen,
+      idCol, textCol, keepFirst)
     val cuts = // eager: affected docs only; finally: no substrate leak on failure
       try f.cuts.localCheckpoint()
       finally f.base.unpersist(blocking = false)
@@ -1662,13 +1646,13 @@ object Dedup {
     * increment-sized segment (the increment's own per-gram `(nocc,
     * keeper)` aggregate) and probes merge on read — correct because
     * `(sum nocc, min keeper)` is a commutative monoid over any partition
-    * of the corpus into segments — while a threshold compaction (total
-    * delta rows > `compactFraction` × base rows) re-aggregates everything
-    * back into one base. The classic LSM bill: O(increment) per fold plus
-    * an O(index) compaction amortized over `compactFraction × |index| /
-    * |increment|` folds; the probe pays a read tax of one extra
-    * increment-keyed join per open delta segment (quantified as the
-    * probe A/B legs in FOLDPROBE.json).
+    * of the corpus into segments ([[KeyedIndex]]) — while a threshold
+    * compaction (total delta rows > `compactFraction` × base rows)
+    * re-aggregates everything back into one base. The classic LSM bill:
+    * O(increment) per fold plus an O(index) compaction amortized over
+    * `compactFraction × |index| / |increment|` folds; the probe pays a
+    * read tax of one extra increment-keyed join per open delta segment
+    * (quantified as the probe A/B legs in FOLDPROBE.json).
     *
     * On a lake this is an append-only layout: the daily fold writes one
     * new bucketed segment dir plus a tiny meta file
@@ -1744,10 +1728,7 @@ object Dedup {
       index: SegmentedExactSubstrIndex): SegmentedExactSubstrIndex =
     if (index.deltas.isEmpty) index
     else {
-      val merged = index.segments.reduce(_ unionByName _)
-        .groupBy("g1", "g2")
-        .agg(sum(col("nocc")).as("nocc"), min(col("keeper")).as("keeper"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val merged = KeyedIndex.fold(index.segments, GramKey)
       val n = merged.count()
       index.segments.foreach(_.unpersist(blocking = false))
       SegmentedExactSubstrIndex(merged, n, Seq.empty, Seq.empty,
@@ -1758,49 +1739,40 @@ object Dedup {
     * index — the same batch-equality contract, emit schema and increment-
     * sized probe shape as [[incrementalRemoveDupSpansExact]]; only the
     * index side differs (per-segment joins + an increment-sized monoid
-    * merge, see [[incrementalExactSubstrFramesOver]]).
+    * merge, see [[KeyedIndex.unionDups]]).
     */
   def incrementalRemoveDupSpansExactSegmented(incoming: DataFrame,
       index: SegmentedExactSubstrIndex, idCol: String = "doc_id",
       textCol: String = "text", keepFirst: Boolean = true,
-      emitOriginal: Boolean = false): DataFrame = {
-    IdContract.requireAbove(incoming, idCol, index.maxDocId,
-      "incrementalRemoveDupSpansExactSegmented")
-    val f = incrementalExactSubstrFramesOver(incoming, index.segments,
-      index.minLen, idCol, textCol, keepFirst)
-    val cuts = // eager: affected docs only; finally: no substrate leak on failure
-      try f.cuts.localCheckpoint()
-      finally f.base.unpersist(blocking = false)
-    if (emitOriginal) emitPiecesOriginal(incoming, cuts, idCol, textCol)
-    else emitPieces(incoming, cuts, idCol, textCol)
-  }
+      emitOriginal: Boolean = false): DataFrame =
+    removeAgainstSegments(incoming, index.segments, index.minLen,
+      index.maxDocId, "incrementalRemoveDupSpansExactSegmented", idCol,
+      textCol, keepFirst, emitOriginal)
 
-  /** Persist a segmented index as an APPEND-ONLY layout: `seg-00000/`
-    * (base) … `seg-0000k/` (deltas), each clustered by `(g1, g2)` into
-    * `nBuckets` files, plus `meta/` pinning `min_len`, the [[IdContract]]
-    * watermark, `compact_fraction` and per-segment row counts. The daily
-    * disk fold ([[foldSegmentedExactSubstrIndexOnDisk]]) then touches
-    * only increment-sized bytes: one new segment dir + the tiny meta.
+  /** Persist a segmented index as an APPEND-ONLY layout through
+    * [[IndexStore]]: `seg-00000/` (base) … `seg-0000k/` (deltas), each
+    * clustered by `(g1, g2)` into `nBuckets` files, plus `meta/` pinning
+    * `min_len`, the [[IdContract]] watermark, `compact_fraction` and
+    * per-segment row counts. The daily disk fold
+    * ([[foldSegmentedExactSubstrIndexOnDisk]]) then touches only
+    * increment-sized bytes: one new segment dir + the tiny meta.
     */
   def writeSegmentedExactSubstrIndex(index: SegmentedExactSubstrIndex,
       dir: String, nBuckets: Int = 64): Unit = {
     index.segments.zipWithIndex.foreach { case (s, i) =>
-      s.repartition(nBuckets, col("g1"), col("g2"))
-        .write.mode("overwrite").parquet(f"$dir/seg-$i%05d")
+      IndexStore.writeTable(s, f"$dir/seg-$i%05d", GramKey, nBuckets)
     }
-    writeSegmentedMeta(index.base.sparkSession, dir, index.minLen,
+    writeSegmentedMeta(index.base.sparkSession, s"$dir/meta", index.minLen,
       index.maxDocId, index.compactFraction,
       index.baseRows +: index.deltaRows)
   }
 
-  private def writeSegmentedMeta(spark: SparkSession, dir: String,
+  private def writeSegmentedMeta(spark: SparkSession, path: String,
       minLen: Int, maxDocId: Long, compactFraction: Double,
-      segRows: Seq[Long]): Unit = {
-    import spark.implicits._
-    Seq((minLen, maxDocId, compactFraction, segRows))
-      .toDF("min_len", "max_doc_id", "compact_fraction", "seg_rows")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
+      segRows: Seq[Long]): Unit =
+    IndexStore.writeMeta(spark, path)("min_len" -> minLen,
+      "max_doc_id" -> maxDocId, "compact_fraction" -> compactFraction,
+      "seg_rows" -> segRows)
 
   /** ATOMIC meta swap: the new meta is written COMPLETE to `.meta.tmp`
     * first (parquet commit = `_SUCCESS` marker), then swapped in with
@@ -1812,12 +1784,10 @@ object Dedup {
   private def swapSegmentedMeta(spark: SparkSession, dir: String,
       minLen: Int, maxDocId: Long, compactFraction: Double,
       segRows: Seq[Long]): Unit = {
-    import spark.implicits._
     val fs = fsOf(spark, dir)
     val tmp = new org.apache.hadoop.fs.Path(s"$dir/.meta.tmp")
-    Seq((minLen, maxDocId, compactFraction, segRows))
-      .toDF("min_len", "max_doc_id", "compact_fraction", "seg_rows")
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    writeSegmentedMeta(spark, tmp.toString, minLen, maxDocId,
+      compactFraction, segRows)
     val meta = new org.apache.hadoop.fs.Path(s"$dir/meta")
     fs.delete(meta, true)
     require(fs.rename(tmp, meta), s"meta swap rename failed under $dir")
@@ -1851,27 +1821,26 @@ object Dedup {
     }
   }
 
-  /** Reload a disk-persisted segmented index; each segment persists
-    * lazily, CLUSTERED on the probe key (one exchange per segment, paid
-    * once at first materialization to refill the in-memory
-    * co-partitioning) — caching the raw scans instead would leave the
-    * cached segments unpartitioned and EVERY probe would re-exchange the
-    * corpus-sized base.
+  /** The recovered meta row of a segmented dir and its per-segment rows. */
+  private def segmentedMeta(spark: SparkSession,
+      dir: String): (org.apache.spark.sql.Row, Seq[Long]) = {
+    recoverSegmentedDir(spark, dir)
+    val meta = IndexStore.readMeta(spark, s"$dir/meta")
+    (meta, meta.getAs[scala.collection.Seq[Long]]("seg_rows").toSeq)
+  }
+
+  /** Reload a disk-persisted segmented index; each segment caches lazily,
+    * CLUSTERED on the probe key ([[IndexStore.readTable]]: one exchange
+    * per segment, paid once at first materialization).
     */
   def readSegmentedExactSubstrIndex(spark: SparkSession,
       dir: String): SegmentedExactSubstrIndex = {
-    recoverSegmentedDir(spark, dir)
-    val meta = spark.read.parquet(s"$dir/meta").head
-    val segRows = meta.getAs[scala.collection.Seq[Long]]("seg_rows").toSeq
+    val (meta, segRows) = segmentedMeta(spark, dir)
     val segs = segRows.indices.map(i =>
-      spark.read.parquet(f"$dir/seg-$i%05d")
-        .repartition(spark.sessionState.conf.numShufflePartitions,
-          col("g1"), col("g2"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+      IndexStore.readTable(spark, f"$dir/seg-$i%05d", GramKey))
     SegmentedExactSubstrIndex(segs.head, segRows.head,
       segs.tail, segRows.tail, meta.getAs[Int]("min_len"),
-      meta.getAs[Long]("max_doc_id"),
-      meta.getAs[Double]("compact_fraction"))
+      IndexStore.watermark(meta), meta.getAs[Double]("compact_fraction"))
   }
 
   /** The DAILY DISK FOLD: append one increment to a disk-resident
@@ -1895,17 +1864,14 @@ object Dedup {
   def foldSegmentedExactSubstrIndexOnDisk(spark: SparkSession, dir: String,
       incoming: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", nBuckets: Int = 8): Unit = {
-    recoverSegmentedDir(spark, dir)
-    val meta = spark.read.parquet(s"$dir/meta").head
-    val segRows = meta.getAs[scala.collection.Seq[Long]]("seg_rows").toSeq
+    val (meta, segRows) = segmentedMeta(spark, dir)
     val minLen = meta.getAs[Int]("min_len")
     val wm = IdContract.requireAboveAndAdvance(incoming, idCol,
-      meta.getAs[Long]("max_doc_id"), "foldSegmentedExactSubstrIndexOnDisk")
+      IndexStore.watermark(meta), "foldSegmentedExactSubstrIndexOnDisk")
     val fs = fsOf(spark, dir)
     val segTmp = new org.apache.hadoop.fs.Path(s"$dir/.seg.tmp")
-    exactGramAgg(incoming, minLen, idCol, textCol)
-      .repartition(nBuckets, col("g1"), col("g2"))
-      .write.mode("overwrite").parquet(segTmp.toString)
+    IndexStore.writeTable(exactGramAgg(incoming, minLen, idCol, textCol),
+      segTmp.toString, GramKey, nBuckets)
     val segDir = new org.apache.hadoop.fs.Path(f"$dir/seg-${segRows.size}%05d")
     fs.delete(segDir, true) // orphan of a crashed fold: unlisted in meta
     require(fs.rename(segTmp, segDir), s"segment rename failed under $dir")
@@ -1924,86 +1890,18 @@ object Dedup {
       index.minLen, idCol, textCol, keepFirst)
 
   /** [[incrementalExactSubstrFrames]] generalized over a SEGMENTED gram
-    * store ([[SegmentedExactSubstrIndex]]). With ONE segment the plan is
-    * the monolithic probe unchanged — a single left join against the
-    * persisted aggregate. With k segments the probe is k CHAINED left
-    * joins — the monolithic probe's exact join shape, once per segment:
-    * the increment-sized accumulator is the shuffled-hash BUILD side
-    * (hinted; AQE converts the same way for the monolithic probe) and
-    * each segment only STREAMS through its cached scan, never shuffled or
-    * sorted. The cross-segment `(sum nocc, min keeper)` monoid then folds
-    * ROW-LOCALLY over the joined columns (`+`/`least`, null-skipping) —
-    * no union, no re-aggregate: two earlier cuts of this plan paid an
-    * index-sized bill here (an optimizer-chosen sort-merge that sorted
-    * the base per segment, then a union + re-aggregate whose fused
-    * non-codegen stage de-vectorized the 170M-row segment scans to ~15 s
-    * where the monolithic probe streams the same store in ~1 s); the
-    * chained shape is pinned in PlanQualitySpec and priced by
-    * FOLDPROBE's read-tax legs.
+    * store ([[SegmentedExactSubstrIndex]]): the increment's own per-gram
+    * aggregate, left-joined against every segment for its union verdict
+    * ([[KeyedIndex.unionDups]] — one join with one segment, k chained
+    * joins with k; the chained shape is pinned in PlanQualitySpec).
     */
   private[graft] def incrementalExactSubstrFramesOver(incoming: DataFrame,
       segments: Seq[DataFrame], minLen: Int, idCol: String, textCol: String,
-      keepFirst: Boolean): RemoveSpanFrames = {
-    val base = incoming
-      .select(col(idCol).as("doc_id"), TextPipeline.tokens(col(textCol)).as("toks"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val grams = base
-      .select(col("doc_id"),
-        posexplode(graft.functions.RollingGramHashes
-          .rollingGramHashes(col("toks"), minLen)))
-      .select(col("doc_id"), col("pos").cast("long").as("i"),
-        col("col.h1").as("g1"), col("col.h2").as("g2"))
-    // the increment's own per-gram aggregate, left-joined against the
-    // index: union-corpus count = inc + index, union-corpus keeper =
-    // min(inc, index) — grams absent from the index (null side) cover
-    // increment-internal duplication with the same expressions.
-    val incAgg = grams
-      .groupBy("g1", "g2")
-      .agg(count(lit(1)).as("inc_nocc"),
-        min(struct(col("doc_id"), col("i"))).as("inc_keeper"))
-    val dupSet =
-      if (segments.lengthCompare(1) == 0)
-        incAgg
-          .join(segments.head.select(col("g1"), col("g2"),
-            col("nocc").as("idx_nocc"), col("keeper").as("idx_keeper")),
-            Seq("g1", "g2"), "left")
-          .select(col("g1"), col("g2"),
-            (col("inc_nocc") + coalesce(col("idx_nocc"), lit(0L))).as("nocc"),
-            when(col("idx_keeper").isNull, col("inc_keeper"))
-              .otherwise(least(col("idx_keeper"), col("inc_keeper"))).as("keeper"))
-          .filter(col("nocc") >= 2)
-          .select("g1", "g2", "keeper")
-      else {
-        val chained = segments.zipWithIndex.foldLeft(incAgg) {
-          case (acc, (seg, i)) =>
-            acc.hint("shuffle_hash")
-              .join(seg.select(col("g1"), col("g2"),
-                col("nocc").as(s"idx_nocc_$i"),
-                col("keeper").as(s"idx_keeper_$i")), Seq("g1", "g2"), "left")
-        }
-        val nocc = segments.indices
-          .map(i => coalesce(col(s"idx_nocc_$i"), lit(0L)))
-          .foldLeft(col("inc_nocc"))(_ + _)
-        // least() skips nulls, and min-of-struct IS lexicographic least,
-        // so the keeper monoid folds row-locally across segments
-        val keeper = least(
-          (segments.indices.map(i => col(s"idx_keeper_$i")) :+
-            col("inc_keeper")): _*)
-        chained
-          .select(col("g1"), col("g2"), nocc.as("nocc"), keeper.as("keeper"))
-          .filter(col("nocc") >= 2)
-          .select("g1", "g2", "keeper")
-      }
-    val joined = grams.join(dupSet, Seq("g1", "g2"))
-    val cutWins =
-      if (keepFirst) joined.filter(struct(col("doc_id"), col("i")) =!= col("keeper"))
-      else joined
-    val cuts = cutWins
-      .groupBy("doc_id")
-      .agg(sort_array(collect_list(col("i"))).as("ps"))
-      .select(col("doc_id"), islandIntervals(col("ps"), minLen).as("cut"))
-    RemoveSpanFrames(base, cuts)
-  }
+      keepFirst: Boolean): RemoveSpanFrames =
+    gramCutFrames(incoming, minLen, idCol, textCol, keepFirst)(grams =>
+      KeyedIndex.unionDups(
+        KeyedIndex.aggregate(grams, GramKey, gramKeeper, "inc_"),
+        segments, GramKey))
 
   /** The corpus's cross-doc-duplicated gram hashes as a SORTED primitive
     * array — the driver-held substrate of [[dupSpanCols]] (binary-search

@@ -5,13 +5,28 @@ import org.apache.spark.sql.functions._
 
 /** Mechanical enforcement of the incremental indexes' doc-id contracts.
   *
-  * Every incremental index in this package ([[ParagraphDedup.ParagraphIndex]],
-  * [[Dedup.ExactSubstrIndex]], [[Dedup.NearDupIndex]],
-  * [[CleanPipeline.CleanIndex]]) carries a `maxDocId` WATERMARK — the
-  * largest doc id the corpus side has absorbed — and every index probe and
-  * fold `require`s the increment's ids STRICTLY ABOVE it. The contract this
-  * enforces is monotone crawl ids, and the reason it must fail loudly is
-  * that the violation corrupts silently: a smaller increment id sharing
+  * Every incremental index in this package carries a `maxDocId` WATERMARK
+  * — the largest doc id the corpus side has absorbed — and every index
+  * probe and fold `require`s the increment's ids STRICTLY ABOVE it:
+  *   - the two per-key `(nocc, keeper)` indexes, which share one build,
+  *     fold and probe core ([[KeyedIndex]]):
+  *     [[ParagraphDedup.ParagraphIndex]] (key `fp`) and
+  *     [[Dedup.ExactSubstrIndex]] / [[Dedup.SegmentedExactSubstrIndex]]
+  *     (key `(g1, g2)`);
+  *   - [[Dedup.NearDupIndex]] (a per-fingerprint min-rep store plus its
+  *     band table);
+  *   - the composed [[CleanPipeline.CleanIndex]] and
+  *     [[CleanPipeline.FullCleanIndex]], whose watermark is the paragraph
+  *     half's.
+  *
+  * All of them persist through one table-and-meta layout ([[IndexStore]]),
+  * whose reader maps a `meta/` without `max_doc_id` (written before the
+  * watermark existed) to [[Unwatermarked]], and their streaming twins fold
+  * through one runner (`graft.streaming.IndexFold`), which skips a
+  * replayed epoch whole — a re-probe would trip this contract.
+  *
+  * The contract enforces monotone crawl ids, and it must fail loudly
+  * because the violation corrupts silently: a smaller increment id sharing
   * content with an indexed doc steals the union keeper, so the batch
   * equivalent would cut the CORPUS copy — text an incremental deployment
   * has already emitted and can never re-emit — and replaying an absorbed id
@@ -41,28 +56,17 @@ object IdContract {
     if (r.isNullAt(0)) Unwatermarked else r.getLong(0)
   }
 
-  /** Probe-side check: every id of `incoming` must sit strictly above
-    * `watermark`. No-op (and no Spark job) when unwatermarked or the
-    * increment is empty.
+  /** Probe-side check: [[requireAboveAndAdvance]] without the advance.
+    * No-op (and no Spark job) when unwatermarked.
     */
   private[graft] def requireAbove(incoming: DataFrame, idCol: String,
       watermark: Long, what: String): Unit =
-    if (watermark != Unwatermarked) {
-      val r = incoming.agg(min(col(idCol).cast("long"))).head
-      if (!r.isNullAt(0))
-        require(r.getLong(0) > watermark,
-          s"$what: monotone doc-id contract violated — increment min id " +
-            s"${r.getLong(0)} <= index watermark $watermark. Ids at or below " +
-            "the watermark would silently steal union keepers (rewriting " +
-            "already-emitted corpus text) or double-count a replayed doc; " +
-            "assign increment ids above the watermark, or probe an " +
-            "unwatermarked one-shot index if you only need increment-side " +
-            "batch equality under disjoint ids.")
-    }
+    requireAboveAndAdvance(incoming, idCol, watermark, what)
 
-  /** Fold-side check + advance: enforces like [[requireAbove]] and returns
-    * the new watermark `max(watermark, max(incoming id))`. An unwatermarked
-    * index stays unwatermarked (no job runs).
+  /** Fold-side check + advance: every id of `incoming` must sit strictly
+    * above `watermark` (an empty increment passes); returns the new
+    * watermark `max(watermark, max(incoming id))`. An unwatermarked index
+    * stays unwatermarked (no job runs).
     */
   private[graft] def requireAboveAndAdvance(incoming: DataFrame, idCol: String,
       watermark: Long, what: String): Long =
@@ -74,8 +78,12 @@ object IdContract {
       else {
         require(r.getLong(0) > watermark,
           s"$what: monotone doc-id contract violated — increment min id " +
-            s"${r.getLong(0)} <= index watermark $watermark (see " +
-            "IdContract: a violated fold silently corrupts the index state).")
+            s"${r.getLong(0)} <= index watermark $watermark. Ids at or below " +
+            "the watermark would silently steal union keepers (rewriting " +
+            "already-emitted corpus text) or double-count a replayed doc; " +
+            "assign increment ids above the watermark, or probe an " +
+            "unwatermarked one-shot index if you only need increment-side " +
+            "batch equality under disjoint ids.")
         math.max(watermark, r.getLong(1))
       }
     }

@@ -150,8 +150,9 @@ object Packing {
   }
 
   /** Maps per-doc span `islands` through `packed` offsets into per-shard
-    * chunk-mask stats — [[spanMaskReport]]'s final stage, also the shared
-    * kernel of the `SpanMaskAB` measurement harness's legacy variants.
+    * chunk-mask stats — [[spanMaskReport]]'s final stage (the legacy
+    * island variants it was measured against are recorded in
+    * SPANMASK_AB.json).
     */
   private[graft] def maskRollup(packed: DataFrame, islands: DataFrame,
       seqLen: Int): DataFrame = {

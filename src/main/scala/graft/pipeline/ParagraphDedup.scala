@@ -150,12 +150,7 @@ object ParagraphDedup {
     // case); keeper = first occurrence in (doc_id, idx) order. Map-side
     // combinable; the dup set is a small corpus fraction, so the probe
     // join broadcasts under AQE.
-    val dupSet = base.filter(!col("blank"))
-      .groupBy("fp")
-      .agg(count(lit(1)).as("nocc"),
-        min(struct(col("doc_id"), col("idx"))).as("keeper"))
-      .filter(col("nocc") >= 2)
-      .select("fp", "keeper")
+    val dupSet = KeyedIndex.dups(unitFpAgg(base), UnitKey)
     ParagraphFrames(base, dupSet, cutCounts(base, dupSet))
   }
 
@@ -313,31 +308,38 @@ object ParagraphDedup {
     def unpersist(): Unit = units.unpersist(blocking = false)
   }
 
-  /** The per-fingerprint `(nocc, keeper)` aggregate of one corpus side —
-    * the map-side-combinable build step shared by [[buildParagraphIndex]],
-    * [[updateParagraphIndex]] and the probe's increment-side aggregate.
-    * Blank units never enter the index (they are exempt from dedup).
+  private val UnitKey = Seq("fp")
+
+  /** The per-fingerprint `(nocc, keeper)` aggregate ([[KeyedIndex]]) of
+    * one side's unit table — the map-side-combinable build step shared by
+    * [[buildParagraphIndex]], [[updateParagraphIndex]] and the probe's
+    * increment-side aggregate. Blank units never enter the index (they are
+    * exempt from dedup).
     */
-  private def unitFpAgg(docs: DataFrame, sepRegex: String,
-      idCol: String, textCol: String): DataFrame =
-    unitTable(docs, sepRegex, idCol, textCol)
-      .filter(!col("blank"))
-      .groupBy("fp")
-      .agg(count(lit(1)).as("nocc"),
-        min(struct(col("doc_id"), col("idx"))).as("keeper"))
+  private def unitFpAgg(units: DataFrame, prefix: String = ""): DataFrame =
+    KeyedIndex.aggregate(units.filter(!col("blank")), UnitKey,
+      struct(col("doc_id"), col("idx")), prefix)
 
   /** Build the corpus-side [[ParagraphIndex]] once; probe it per increment
     * with [[incrementalDedupUnits]], fold each shipped increment into it
     * with [[updateParagraphIndex]].
     */
   def buildParagraphIndex(corpus: DataFrame, sepRegex: String = ParagraphSep,
-      idCol: String = "doc_id", textCol: String = "text"): ParagraphIndex = {
+      idCol: String = "doc_id", textCol: String = "text"): ParagraphIndex =
+    paragraphIndexAt(corpus, sepRegex, IdContract.maxId(corpus, idCol),
+      idCol, textCol)
+
+  /** [[buildParagraphIndex]] with a caller-supplied [[IdContract]]
+    * watermark ([[IdContract.Unwatermarked]]: the one-shot mode).
+    */
+  private def paragraphIndexAt(corpus: DataFrame, sepRegex: String,
+      maxDocId: Long, idCol: String = "doc_id",
+      textCol: String = "text"): ParagraphIndex = {
     require(sepRegex.nonEmpty, "separator regex must be non-empty")
     ParagraphIndex(
-      unitFpAgg(corpus, sepRegex, idCol, textCol)
+      unitFpAgg(unitTable(corpus, sepRegex, idCol, textCol))
         .persist(StorageLevel.MEMORY_AND_DISK),
-      sepRegex,
-      IdContract.maxId(corpus, idCol))
+      sepRegex, maxDocId)
   }
 
   /** [[buildParagraphIndex]] and [[dedupUnits]] over THE SAME corpus from
@@ -368,17 +370,12 @@ object ParagraphDedup {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val (index, kept) =
       try {
-        val units = base.filter(!col("blank"))
-          .groupBy("fp")
-          .agg(count(lit(1)).as("nocc"),
-            min(struct(col("doc_id"), col("idx"))).as("keeper"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val units = unitFpAgg(base).persist(StorageLevel.MEMORY_AND_DISK)
         // materialize the index OFF the substrate before the caller
         // releases it — a lazy persist would re-derive the unit table on
         // first use
         units.count()
-        val d = units.filter(col("nocc") >= 2).select("fp", "keeper")
-          .localCheckpoint()
+        val d = KeyedIndex.dups(units, UnitKey).localCheckpoint()
         val c = cutCounts(base, d).localCheckpoint()
         (ParagraphIndex(units, sepRegex, IdContract.maxId(corpus, idCol)),
           emitKeptFromUnits(base, d, c))
@@ -407,49 +404,31 @@ object ParagraphDedup {
     val wm = IdContract.requireAboveAndAdvance(incoming, idCol,
       index.maxDocId, "updateParagraphIndex")
     ParagraphIndex(
-      index.units
-        .unionByName(unitFpAgg(incoming, index.sepRegex, idCol, textCol))
-        .groupBy("fp")
-        .agg(sum(col("nocc")).as("nocc"), min(col("keeper")).as("keeper"))
-        .persist(StorageLevel.MEMORY_AND_DISK),
+      KeyedIndex.fold(Seq(index.units,
+        unitFpAgg(unitTable(incoming, index.sepRegex, idCol, textCol))), UnitKey),
       index.sepRegex, wm)
   }
 
-  /** Persist a [[ParagraphIndex]] to `dir` as parquet — `units/` clustered
-    * into `nBuckets` files by `fp` (a bucketed table on a real warehouse,
-    * so the probe equi-join co-locates against the index without shuffling
-    * it), `meta/` pinning the separator regex so a reloaded probe can
-    * never split with a mismatched unit notion.
+  /** Persist a [[ParagraphIndex]] to `dir` through [[IndexStore]] —
+    * `units/` clustered into `nBuckets` files by `fp`, `meta/` pinning the
+    * separator regex (a reloaded probe can never split with a mismatched
+    * unit notion) and the [[IdContract]] watermark.
     */
   def writeParagraphIndex(index: ParagraphIndex, dir: String,
       nBuckets: Int = 64): Unit = {
-    index.units.repartition(nBuckets, col("fp"))
-      .write.mode("overwrite").parquet(s"$dir/units")
-    val spark = index.units.sparkSession
-    import spark.implicits._
-    Seq((index.sepRegex, index.maxDocId)).toDF("sep_regex", "max_doc_id")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    IndexStore.writeTable(index.units, s"$dir/units", UnitKey, nBuckets)
+    IndexStore.writeMeta(index.units.sparkSession, s"$dir/meta")(
+      "sep_regex" -> index.sepRegex, "max_doc_id" -> index.maxDocId)
   }
 
   /** Reload a disk-persisted index ([[writeParagraphIndex]]) in a fresh
-    * session; persists lazily, so the first probe pays the parquet scan.
-    * The [[IdContract]] watermark round-trips with the index (indexes
-    * written before the watermark existed reload unwatermarked).
+    * session; the unit table caches lazily, clustered on `fp`.
     */
   def readParagraphIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): ParagraphIndex = {
-    val meta = spark.read.parquet(s"$dir/meta").head
-    ParagraphIndex(
-      // cluster on the probe key before caching: a raw-scan cache has
-      // unknown partitioning and every increment probe would re-exchange
-      // the corpus-sized unit table (one-time warm-up exchange instead)
-      spark.read.parquet(s"$dir/units")
-        .repartition(spark.sessionState.conf.numShufflePartitions, col("fp"))
-        .persist(StorageLevel.MEMORY_AND_DISK),
-      meta.getAs[String]("sep_regex"),
-      if (meta.schema.fieldNames.contains("max_doc_id"))
-        meta.getAs[Long]("max_doc_id")
-      else IdContract.Unwatermarked)
+    val meta = IndexStore.readMeta(spark, s"$dir/meta")
+    ParagraphIndex(IndexStore.readTable(spark, s"$dir/units", UnitKey),
+      meta.getAs[String]("sep_regex"), IndexStore.watermark(meta))
   }
 
   /** INCREMENTAL paragraph/line dedup — the daily-crawl twin of
@@ -503,9 +482,6 @@ object ParagraphDedup {
       () => f.base.unpersist(blocking = false))
   }
 
-  private case class IncrementalKeptFrames(
-      base: DataFrame, dupSet: DataFrame, cuts: DataFrame)
-
   /** The shared increment-side derivation of [[incrementalDedupUnits]]:
     * persisted unit substrate, union-verdict dup set (checkpointed), cut
     * counts (checkpointed). On failure the substrate is released here; on
@@ -514,29 +490,16 @@ object ParagraphDedup {
     */
   private def incrementalKeptFrames(incoming: DataFrame,
       index: ParagraphIndex, idCol: String,
-      textCol: String): IncrementalKeptFrames = {
+      textCol: String): ParagraphFrames = {
     IdContract.requireAbove(incoming, idCol, index.maxDocId,
       "incrementalDedupUnits")
     val base = unitTable(incoming, index.sepRegex, idCol, textCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val incAgg = base.filter(!col("blank"))
-        .groupBy("fp")
-        .agg(count(lit(1)).as("inc_nocc"),
-          min(struct(col("doc_id"), col("idx"))).as("inc_keeper"))
-      val d = incAgg
-        .join(index.units.select(col("fp"), col("nocc").as("idx_nocc"),
-          col("keeper").as("idx_keeper")), Seq("fp"), "left")
-        .select(col("fp"),
-          (col("inc_nocc") + coalesce(col("idx_nocc"), lit(0L))).as("nocc"),
-          when(col("idx_keeper").isNull, col("inc_keeper"))
-            .otherwise(least(col("idx_keeper"), col("inc_keeper")))
-            .as("keeper"))
-        .filter(col("nocc") >= 2)
-        .select("fp", "keeper")
-        .localCheckpoint()
+      val d = KeyedIndex.unionDups(unitFpAgg(base, "inc_"), Seq(index.units),
+        UnitKey).localCheckpoint()
       val c = cutCounts(base, d).localCheckpoint()
-      IncrementalKeptFrames(base, d, c)
+      ParagraphFrames(base, d, c)
     } catch {
       case t: Throwable => base.unpersist(blocking = false); throw t
     }
@@ -554,11 +517,7 @@ object ParagraphDedup {
     */
   def incrementalDedupUnits(incoming: DataFrame, corpus: DataFrame,
       sepRegex: String): DataFrame = {
-    require(sepRegex.nonEmpty, "separator regex must be non-empty")
-    val idx = ParagraphIndex(
-      unitFpAgg(corpus, sepRegex, "doc_id", "text")
-        .persist(StorageLevel.MEMORY_AND_DISK),
-      sepRegex)
+    val idx = paragraphIndexAt(corpus, sepRegex, IdContract.Unwatermarked)
     try incrementalDedupUnits(incoming, idx)
     finally idx.unpersist()
   }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.pipeline.TextPipeline
+import graft.pipeline.{CleanPipeline, Dedup, ParagraphDedup, TextPipeline}
 
 /** One event of a user activity stream (sessionization input). */
 final case class SessionEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)
@@ -54,67 +54,65 @@ final case class AsofState(refTsMs: Long, refValue: Double)
 final case class AsofEnriched(key: Long, ts: java.sql.Timestamp,
                               value: Double, ref_value: Option[Double])
 
-/** A running streaming-removal query plus the live handle to its
-  * forward-folding substring index ([[StreamingPipeline
-  * .removeDupSpansExactStream]]): `currentIndex()` always returns the
-  * corpus ∪ processed-batches state — after `query` stops, that is what
-  * deployment persists for the next run, and what the caller unpersists.
+/** A running index-folding stream — every `*Stream` twin of an
+  * incremental index ([[StreamingPipeline.removeDupSpansExactStream]] …
+  * [[StreamingPipeline.fullCleanCorpusStream]]) — plus the live handle to
+  * its forward-folding index: `currentIndex()` always returns the corpus ∪
+  * processed-batches state. After `query` stops, that is what deployment
+  * persists for the next run (the index's `write*`), and what the caller
+  * unpersists.
   */
-final case class StreamingRemoval(
+final case class IndexStream[I](
     query: org.apache.spark.sql.streaming.StreamingQuery,
-    currentIndex: () => graft.pipeline.Dedup.ExactSubstrIndex)
+    currentIndex: () => I)
 
-/** [[StreamingRemoval]]'s twin over the LSM-SEGMENTED index
-  * ([[StreamingPipeline.removeDupSpansExactStreamSegmented]]): same
-  * `currentIndex()` contract, but the state is
-  * [[graft.pipeline.Dedup.SegmentedExactSubstrIndex]] — what deployment
-  * persists via [[graft.pipeline.Dedup.writeSegmentedExactSubstrIndex]].
+/** The one index-folding micro-batch loop behind every [[IndexStream]]:
+  * `step(index, batch)` returns the batch probed against the index of the
+  * corpus PLUS ALL PRIOR BATCHES, which is handed to `sink`, and the fold
+  * that the runner then calls to carry the index forward (deferred, so a
+  * fold may reuse what the probe checkpointed). `frames` lists an index's
+  * persisted frames: the new fold's are materialized before the superseded
+  * fold's are retired. The segmented index lists none — its update
+  * materializes the new delta itself, and its folds share frames
+  * append-only. `initial` stays the caller's (never unpersisted here).
+  * Micro-batches run sequentially per query, so the swap needs no lock.
+  *
+  * foreachBatch is AT-LEAST-ONCE: an epoch can re-run after a failure,
+  * and the count folds are not idempotent (a double fold double-counts
+  * every unit/gram of the batch, silently corrupting keeper/count state).
+  * A replayed epoch (`epoch <= lastFolded`) is therefore skipped WHOLE —
+  * probe included: its output was already sunk by the completed attempt,
+  * and re-probing against the already-folded state would fail the probe's
+  * own [[graft.pipeline.IdContract]] check (replayed ids sit at or below
+  * the advanced watermark). A restart from checkpoint must still pair a
+  * re-read index with the offsets it was folded to (write the index per
+  * epoch).
   */
-final case class StreamingRemovalSegmented(
-    query: org.apache.spark.sql.streaming.StreamingQuery,
-    currentIndex: () => graft.pipeline.Dedup.SegmentedExactSubstrIndex)
+private[streaming] final class IndexFold[I <: AnyRef](initial: I,
+    sink: (DataFrame, Long) => Unit, frames: I => Seq[DataFrame])(
+    step: (I, DataFrame) => (DataFrame, () => I)) {
+  @volatile private var idx = initial
+  private var lastFolded = Long.MinValue
 
-/** A running streaming near-dup query plus the live handle to its
-  * forward-folding LSH index ([[StreamingPipeline.incrementalNearDupStream]]):
-  * `currentIndex()` always returns the corpus ∪ processed-batches state —
-  * after `query` stops, that is what deployment persists
-  * ([[graft.pipeline.Dedup.writeNearDupIndex]]) for the next run, and what
-  * the caller unpersists.
-  */
-final case class StreamingNearDup(
-    query: org.apache.spark.sql.streaming.StreamingQuery,
-    currentIndex: () => graft.pipeline.Dedup.NearDupIndex)
+  def current: I = idx
 
-/** A running streaming paragraph/line-dedup query plus the live handle to
-  * its forward-folding unit-fingerprint index
-  * ([[StreamingPipeline.dedupUnitsStream]]): `currentIndex()` always
-  * returns the corpus ∪ processed-batches state — after `query` stops,
-  * that is what deployment persists
-  * ([[graft.pipeline.ParagraphDedup.writeParagraphIndex]]) for the next
-  * run, and what the caller unpersists.
-  */
-final case class StreamingParagraphDedup(
-    query: org.apache.spark.sql.streaming.StreamingQuery,
-    currentIndex: () => graft.pipeline.ParagraphDedup.ParagraphIndex)
+  def apply(batch: DataFrame, epoch: Long): Unit =
+    if (epoch > lastFolded) {
+      val (out, fold) = step(idx, batch)
+      sink(out, epoch)
+      val next = fold()
+      frames(next).foreach(_.count())
+      if (idx ne initial) frames(idx).foreach(_.unpersist(blocking = false))
+      idx = next
+      lastFolded = epoch
+    }
 
-/** Handle on a running COMPOSED-cleanup stream
-  * ([[StreamingPipeline.cleanCorpusStream]]): `currentIndex()` is the
-  * two-stage corpus ∪ processed-batches state (paragraph unit index +
-  * cleaned-corpus gram index) — what deployment persists for the next
-  * run, and what the caller unpersists.
-  */
-final case class StreamingCleanPipeline(
-    query: org.apache.spark.sql.streaming.StreamingQuery,
-    currentIndex: () => graft.pipeline.CleanPipeline.CleanIndex)
-
-/** Handle on a running FULL-cleanup stream
-  * ([[StreamingPipeline.fullCleanCorpusStream]]): `currentIndex()` is the
-  * three-stage corpus ∪ processed-batches state (paragraph unit index +
-  * cleaned-rep LSH index + survivor gram index).
-  */
-final case class StreamingFullCleanPipeline(
-    query: org.apache.spark.sql.streaming.StreamingQuery,
-    currentIndex: () => graft.pipeline.CleanPipeline.FullCleanIndex)
+  def start(docs: DataFrame): IndexStream[I] = IndexStream(
+    docs.writeStream.outputMode(OutputMode.Append())
+      .foreachBatch((batch: DataFrame, epoch: Long) => apply(batch, epoch))
+      .start(),
+    () => idx)
+}
 
 /** Structured Streaming variants of the stateless pipeline operators
   * (SURVEY.md §7.5: the reference is strictly batch; streaming enters only
@@ -247,7 +245,7 @@ object StreamingPipeline {
     */
   def dupSpanProfileStream(docs: DataFrame, dupGrams: Array[Long], n: Int,
                            textCol: String = "text"): DataFrame = {
-    val sp = graft.pipeline.Dedup.dupSpanCols(col(textCol), dupGrams, n)
+    val sp = Dedup.dupSpanCols(col(textCol), dupGrams, n)
     docs.withColumn("n_tokens", sp.getField("n_tokens"))
       .withColumn("n_dup_windows", sp.getField("n_dup_windows"))
       .withColumn("n_spans", sp.getField("n_spans"))
@@ -264,7 +262,7 @@ object StreamingPipeline {
   def dupSpanProfileMultiStream(docs: DataFrame,
       dupGramsByOrder: Seq[(Int, Array[Long])], minLen: Int,
       textCol: String = "text"): DataFrame = {
-    val sp = graft.pipeline.Dedup.dupSpanColsMulti(
+    val sp = Dedup.dupSpanColsMulti(
       col(textCol), dupGramsByOrder, minLen)
     docs.withColumn("n_tokens", sp.getField("n_tokens"))
       .withColumn("n_spans", sp.getField("n_spans"))
@@ -273,7 +271,7 @@ object StreamingPipeline {
   }
 
   /** Streaming EXACT substring removal (P52's stream form) — the
-    * accumulating daily-crawl loop as a `foreachBatch` runner: every
+    * accumulating daily-crawl loop as an [[IndexFold]] runner: every
     * micro-batch is cleaned against the per-gram (count, keeper) index of
     * the corpus PLUS ALL PRIOR BATCHES
     * ([[graft.pipeline.Dedup.incrementalRemoveDupSpansExact]]), its
@@ -285,6 +283,7 @@ object StreamingPipeline {
     * row-at-a-time state; the index itself is the cross-batch state, and
     * it lives outside the state store because it is corpus-sized and
     * disk-persistable ([[graft.pipeline.Dedup.writeExactSubstrIndex]]).
+    * The same holds for every index twin below.
     *
     * With doc ids monotone across batches (the natural crawl ordering),
     * every emitted piece is bit-equal to the BATCH
@@ -293,149 +292,76 @@ object StreamingPipeline {
     * StreamingSpec with a duplicate planted across two micro-batches
     * (cut only because the index fold carried batch 1's grams into
     * batch 2's probe).
-    *
-    * The caller owns `initial` (it is never unpersisted here);
-    * intermediate fold results are retired as they are superseded, and
-    * the LATEST fold stays reachable through the returned handle — after
-    * the query stops, `currentIndex()` is the corpus ∪ all-batches state,
-    * which deployment writes to disk
-    * ([[graft.pipeline.Dedup.writeExactSubstrIndex]]) as the next run's
-    * `initial` (and the caller unpersists once done with it). Micro-
-    * batches run sequentially per query, so the index swap needs no lock.
     */
   def removeDupSpansExactStream(docs: DataFrame,
-      initial: graft.pipeline.Dedup.ExactSubstrIndex,
+      initial: Dedup.ExactSubstrIndex,
       sink: (DataFrame, Long) => Unit,
-      emitOriginal: Boolean = false): StreamingRemoval = {
-    @volatile var idx = initial
-    // foreachBatch is AT-LEAST-ONCE: an epoch can re-run after a failure,
-    // and the fold is not idempotent (a double fold double-counts every
-    // gram of the batch, silently corrupting keeper/count state). A
-    // replayed epoch (epoch <= lastFolded) is skipped WHOLE — probe
-    // included: the batch's pieces were already emitted by the completed
-    // attempt, and re-probing against the already-folded state would
-    // both inflate counts AND fail the probe's own watermark check
-    // (replayed ids sit at or below the advanced maxDocId). A restart
-    // from checkpoint must still pair a re-read index with the offsets
-    // it was folded to (write the index per epoch).
-    var lastFolded = Long.MinValue
-    val q = docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        if (epoch > lastFolded) {
-          sink(graft.pipeline.Dedup.incrementalRemoveDupSpansExact(batch, idx,
-            emitOriginal = emitOriginal), epoch)
-          val next = graft.pipeline.Dedup.updateExactSubstrIndex(idx, batch)
-          next.grams.count() // materialize before retiring the superseded index
-          if (idx ne initial) idx.unpersist()
-          idx = next
-          lastFolded = epoch
-        }
-      }
-      .start()
-    StreamingRemoval(q, () => idx)
-  }
+      emitOriginal: Boolean = false): IndexStream[Dedup.ExactSubstrIndex] =
+    new IndexFold(initial, sink, (i: Dedup.ExactSubstrIndex) => Seq(i.grams))(
+      (idx, batch) => (
+        Dedup.incrementalRemoveDupSpansExact(batch, idx, emitOriginal = emitOriginal),
+        () => Dedup.updateExactSubstrIndex(idx, batch)))
+      .start(docs)
 
   /** [[removeDupSpansExactStream]] over the LSM-SEGMENTED index (P62) —
     * the layout built for exactly this loop: the monolithic stream pays
     * an O(index) re-aggregate-and-materialize EVERY micro-batch (the
     * fold IS the trigger cadence), while the segmented fold appends one
-    * batch-sized segment — O(batch) per trigger — and compacts only when
-    * the open deltas cross the index's threshold. No per-batch
-    * retire-and-swap dance either: folds share frames append-only
+    * batch-sized segment — O(batch) per trigger, materialized inside the
+    * update — and compacts only when the open deltas cross the index's
+    * threshold. Nothing is retired here: folds share frames append-only
     * (see [[graft.pipeline.Dedup.SegmentedExactSubstrIndex]] ownership),
-    * and compaction retires what it consumed itself. Same at-least-once
-    * epoch guard and batch-equality contract as the monolithic form;
-    * pinned in StreamingSpec against one batch run over the union.
+    * and compaction retires what it consumed itself. Same batch-equality
+    * contract as the monolithic form; pinned in StreamingSpec against one
+    * batch run over the union.
     */
   def removeDupSpansExactStreamSegmented(docs: DataFrame,
-      initial: graft.pipeline.Dedup.SegmentedExactSubstrIndex,
+      initial: Dedup.SegmentedExactSubstrIndex,
       sink: (DataFrame, Long) => Unit,
-      emitOriginal: Boolean = false): StreamingRemovalSegmented = {
-    @volatile var idx = initial
-    var lastFolded = Long.MinValue
-    val q = docs.writeStream
-      .outputMode(OutputMode.Append())
-      // same at-least-once rule as the monolithic twin: a replayed epoch
-      // skips WHOLE (probe included) — its pieces were already emitted,
-      // and the probe's watermark check would reject the replayed ids
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        if (epoch > lastFolded) {
-          sink(graft.pipeline.Dedup.incrementalRemoveDupSpansExactSegmented(
-            batch, idx, emitOriginal = emitOriginal), epoch)
-          // O(batch): materializes only the new delta (inside update);
-          // superseded handles share every frame with the new one, so
-          // there is nothing to retire here
-          idx = graft.pipeline.Dedup.updateSegmentedExactSubstrIndex(idx, batch)
-          lastFolded = epoch
-        }
-      }
-      .start()
-    StreamingRemovalSegmented(q, () => idx)
-  }
+      emitOriginal: Boolean = false)
+      : IndexStream[Dedup.SegmentedExactSubstrIndex] =
+    new IndexFold(initial, sink, (_: Dedup.SegmentedExactSubstrIndex) => Nil)(
+      (idx, batch) => (
+        Dedup.incrementalRemoveDupSpansExactSegmented(batch, idx,
+          emitOriginal = emitOriginal),
+        () => Dedup.updateSegmentedExactSubstrIndex(idx, batch)))
+      .start(docs)
 
-  /** Streaming incremental NEAR-DUP detection (P46's stream form) — the
-    * daily-crawl loop as a `foreachBatch` runner, mirroring
-    * [[removeDupSpansExactStream]]: every micro-batch probes the LSH index
-    * of the corpus PLUS ALL PRIOR BATCHES
-    * ([[graft.pipeline.Dedup.incrementalNearDup]]) — its verified
+  /** Streaming incremental NEAR-DUP detection (P46's stream form): every
+    * micro-batch probes the LSH index of the corpus PLUS ALL PRIOR
+    * BATCHES ([[graft.pipeline.Dedup.incrementalNearDup]]) — its verified
     * cross-side pairs `(new_id, idx_id, jaccard)` handed to `sink` — and
     * the index is folded forward
     * ([[graft.pipeline.Dedup.updateNearDupIndex]]) before the next batch.
-    * foreachBatch is the honest vehicle for the same reason as the
-    * substring twin: the probe needs the batch's own rep-collapse +
-    * signature AGGREGATE (batch semantics per trigger), and the index is
-    * corpus-sized cross-batch state that lives outside the state store
-    * (disk-persistable via `writeNearDupIndex`).
     *
     * The fold is provably batch-equal: the rep store is a per-fingerprint
     * `min(struct(doc_id, text))` monoid, so `currentIndex()` after N
     * batches IS `buildNearDupIndex(corpus ∪ batches)` (pinned in
-    * StreamingSpec), and — unlike the substring index's occurrence sums —
-    * the fold is IDEMPOTENT (min twice = min once), so an at-least-once
-    * epoch replay cannot corrupt the state. The epoch guard below still
-    * skips redundant re-folds for cost, not correctness. The caller owns
-    * `initial` (never unpersisted here); superseded folds are retired as
-    * they are replaced.
+    * StreamingSpec).
     */
   def incrementalNearDupStream(docs: DataFrame,
-      initial: graft.pipeline.Dedup.NearDupIndex,
+      initial: Dedup.NearDupIndex,
       threshold: Double,
-      sink: (DataFrame, Long) => Unit): StreamingNearDup = {
-    @volatile var idx = initial
-    var lastFolded = Long.MinValue
-    val q = docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        sink(graft.pipeline.Dedup.incrementalNearDup(batch, idx, threshold),
-          epoch)
-        if (epoch > lastFolded) {
-          val next = graft.pipeline.Dedup.updateNearDupIndex(idx, batch)
-          // materialize before retiring the superseded index
-          next.docStore.count(); next.bands.count()
-          if (idx ne initial) idx.unpersist()
-          idx = next
-          lastFolded = epoch
-        }
-      }
-      .start()
-    StreamingNearDup(q, () => idx)
-  }
+      sink: (DataFrame, Long) => Unit): IndexStream[Dedup.NearDupIndex] =
+    nearDupFold(initial, threshold, sink).start(docs)
+
+  /** [[incrementalNearDupStream]]'s runner, not yet started. */
+  private[streaming] def nearDupFold(initial: Dedup.NearDupIndex,
+      threshold: Double, sink: (DataFrame, Long) => Unit) =
+    new IndexFold(initial, sink, (i: Dedup.NearDupIndex) => Seq(i.docStore, i.bands))(
+      (idx, batch) => (
+        Dedup.incrementalNearDup(batch, idx, threshold),
+        () => Dedup.updateNearDupIndex(idx, batch)))
 
   /** Streaming incremental PARAGRAPH/LINE dedup (P55's stream form) — the
-    * sub-document pass real crawls run FIRST, as a `foreachBatch` runner
-    * mirroring [[removeDupSpansExactStream]]: every micro-batch is cleaned
+    * sub-document pass real crawls run FIRST: every micro-batch is cleaned
     * against the per-fingerprint `(nocc, keeper)` unit index of the corpus
     * PLUS ALL PRIOR BATCHES
     * ([[graft.pipeline.ParagraphDedup.incrementalDedupUnits]]), its kept
     * units handed to `sink` in [[graft.pipeline.ParagraphDedup
     * .dedupUnits]]'s verbatim-byte schema, and the index folded forward
     * ([[graft.pipeline.ParagraphDedup.updateParagraphIndex]]) before the
-    * next batch. foreachBatch is the honest vehicle: the probe needs the
-    * batch's own per-fp AGGREGATE (occurrence counts and first-occurrence
-    * keepers — batch semantics per trigger), and the index is corpus-
-    * sized cross-batch state that lives outside the state store
-    * (disk-persistable via `writeParagraphIndex`).
+    * next batch.
     *
     * With doc ids monotone across batches (the natural crawl ordering),
     * every emitted unit row is bit-equal to the BATCH
@@ -443,35 +369,22 @@ object StreamingPipeline {
     * corpus ∪ all batches restricted to that batch's docs — pinned in
     * StreamingSpec with a duplicate paragraph planted across two
     * micro-batches (cut only because the index fold carried batch 1's
-    * fingerprints into batch 2's probe). The fold's keeper half is an
-    * idempotent MIN; the count half SUMS (a replayed epoch would inflate
-    * `nocc` — geometry survives, see `updateParagraphIndex`), so the
-    * epoch guard below skips redundant re-folds. The caller owns
-    * `initial` (never unpersisted here); superseded folds are retired as
-    * they are replaced.
+    * fingerprints into batch 2's probe).
     */
   def dedupUnitsStream(docs: DataFrame,
-      initial: graft.pipeline.ParagraphDedup.ParagraphIndex,
-      sink: (DataFrame, Long) => Unit): StreamingParagraphDedup = {
-    @volatile var idx = initial
-    var lastFolded = Long.MinValue
-    val q = docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        sink(graft.pipeline.ParagraphDedup.incrementalDedupUnits(batch, idx),
-          epoch)
-        if (epoch > lastFolded) {
-          val next = graft.pipeline.ParagraphDedup
-            .updateParagraphIndex(idx, batch)
-          next.units.count() // materialize before retiring the superseded index
-          if (idx ne initial) idx.unpersist()
-          idx = next
-          lastFolded = epoch
-        }
-      }
-      .start()
-    StreamingParagraphDedup(q, () => idx)
-  }
+      initial: ParagraphDedup.ParagraphIndex,
+      sink: (DataFrame, Long) => Unit)
+      : IndexStream[ParagraphDedup.ParagraphIndex] =
+    paragraphFold(initial, sink).start(docs)
+
+  /** [[dedupUnitsStream]]'s runner, not yet started. */
+  private[streaming] def paragraphFold(
+      initial: ParagraphDedup.ParagraphIndex,
+      sink: (DataFrame, Long) => Unit) =
+    new IndexFold(initial, sink, (i: ParagraphDedup.ParagraphIndex) => Seq(i.units))(
+      (idx, batch) => (
+        ParagraphDedup.incrementalDedupUnits(batch, idx),
+        () => ParagraphDedup.updateParagraphIndex(idx, batch)))
 
   /** Streaming COMPOSED cleanup (P58/P59's stream form) — every
     * micro-batch runs the full production chain against the two-stage
@@ -480,43 +393,21 @@ object StreamingPipeline {
     * batch-equal under the monotone-id contract), its cleaned pieces
     * handed to `sink`, and BOTH index halves folded forward
     * ([[graft.pipeline.CleanPipeline.updateCleanIndex]]: raw batch into
-    * the paragraph half, CLEANED batch into the gram half) before the
-    * next trigger. foreachBatch for the same reason as the component
-    * twins: the probes need the batch's own aggregates, and the index is
-    * corpus-sized cross-batch state living outside the state store.
-    *
-    * At-least-once epochs + a NON-idempotent count fold (both halves):
-    * same-process retries are guarded by epoch, exactly as in
-    * [[removeDupSpansExactStream]] — a restart from checkpoint must pair
-    * a re-read index with the offsets it was folded to.
+    * the paragraph half, CLEANED batch into the gram half). The cleaned
+    * batch is derived ONCE (checkpointed) and handed to both the sink path
+    * and the gram-half fold.
     */
   def cleanCorpusStream(docs: DataFrame,
-      initial: graft.pipeline.CleanPipeline.CleanIndex,
-      sink: (DataFrame, Long) => Unit): StreamingCleanPipeline = {
-    @volatile var idx = initial
-    var lastFolded = Long.MinValue
-    val q = docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        // derive the cleaned batch ONCE (checkpointed) and hand it to both
-        // the sink path and the gram-half fold — the fold used to re-run
-        // the paragraph probe + re-join per trigger
-        val (pieces, cleanedBatch) = graft.pipeline.CleanPipeline
-          .incrementalCleanCorpusWithCleaned(batch, idx)
-        sink(pieces, epoch)
-        if (epoch > lastFolded) {
-          val next = graft.pipeline.CleanPipeline
-            .updateCleanIndexWith(idx, batch, cleanedBatch, "doc_id", "text")
-          // materialize both halves before retiring the superseded index
-          next.para.units.count(); next.substr.grams.count()
-          if (idx ne initial) idx.unpersist()
-          idx = next
-          lastFolded = epoch
-        }
-      }
-      .start()
-    StreamingCleanPipeline(q, () => idx)
-  }
+      initial: CleanPipeline.CleanIndex,
+      sink: (DataFrame, Long) => Unit): IndexStream[CleanPipeline.CleanIndex] =
+    new IndexFold(initial, sink,
+      (i: CleanPipeline.CleanIndex) => Seq(i.para.units, i.substr.grams))(
+      (idx, batch) => {
+        val (pieces, cleanedBatch) =
+          CleanPipeline.incrementalCleanCorpusWithCleaned(batch, idx)
+        (pieces, () => CleanPipeline
+          .updateCleanIndexWith(idx, batch, cleanedBatch, "doc_id", "text"))
+      }).start(docs)
 
   /** Streaming FULL cleanup (P60/P61's stream form) — every micro-batch
     * runs the whole production chain against the three-stage index
@@ -528,35 +419,20 @@ object StreamingPipeline {
     * into the paragraph half, CLEANED batch reps into the LSH half, batch
     * SURVIVORS into the gram half). The probe is derived ONCE per trigger
     * and shared between the sink path and the fold (the derive-once
-    * contract of `fullCleanProbe`). Same at-least-once/epoch-guard notes
-    * as [[cleanCorpusStream]].
+    * contract of `fullCleanProbe`).
     */
   def fullCleanCorpusStream(docs: DataFrame,
-      initial: graft.pipeline.CleanPipeline.FullCleanIndex,
-      sink: (DataFrame, Long) => Unit): StreamingFullCleanPipeline = {
-    @volatile var idx = initial
-    var lastFolded = Long.MinValue
-    val q = docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val probe = graft.pipeline.CleanPipeline
-          .fullCleanProbe(batch, idx, "doc_id", "text")
-        sink(probe.pieces, epoch)
-        if (epoch > lastFolded) {
-          val next = graft.pipeline.CleanPipeline
-            .updateFullCleanIndexWith(idx, batch, probe, "doc_id", "text")
-          // materialize all halves before retiring the superseded index
-          next.para.units.count(); next.substr.grams.count()
-          next.nearDup.docStore.count(); next.nearDup.bands.count()
-          next.corpusFps.count()
-          if (idx ne initial) idx.unpersist()
-          idx = next
-          lastFolded = epoch
-        }
-      }
-      .start()
-    StreamingFullCleanPipeline(q, () => idx)
-  }
+      initial: CleanPipeline.FullCleanIndex,
+      sink: (DataFrame, Long) => Unit)
+      : IndexStream[CleanPipeline.FullCleanIndex] =
+    new IndexFold(initial, sink, (i: CleanPipeline.FullCleanIndex) => Seq(
+      i.para.units, i.substr.grams, i.nearDup.docStore, i.nearDup.bands,
+      i.corpusFps))(
+      (idx, batch) => {
+        val probe = CleanPipeline.fullCleanProbe(batch, idx, "doc_id", "text")
+        (probe.pieces, () => CleanPipeline
+          .updateFullCleanIndexWith(idx, batch, probe, "doc_id", "text"))
+      }).start(docs)
 
   /** Gap-based user sessionization with CUSTOM state
     * (`flatMapGroupsWithState`, the engine's stateful-streaming extension

@@ -77,7 +77,8 @@ object SpanTailProbe {
     // does). Any substrate the frames persisted is released and caches
     // dropped before the later legs — block-manager residency from this
     // leg would otherwise skew the emission/full-tail timings the probe
-    // exists to isolate (the isolation discipline of CleanPipelineAB).
+    // exists to isolate (the isolation discipline of the CLEANPIPE_AB.json
+    // measurement).
     val (cuts, tCuts) = timed {
       val f = D.removeDupSpansFrames(docs, ns, minLen, "doc_id", "text")
       try f.cuts.localCheckpoint()

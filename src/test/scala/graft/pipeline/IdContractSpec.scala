@@ -124,6 +124,39 @@ class IdContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally idx.unpersist()
   }
 
+  test("pre-watermark layouts: a meta/ without max_doc_id reloads unwatermarked") {
+    // layout -> (write the corpus index to dir, reload dir's watermark)
+    def roundTrip[I](build: => I, write: (I, String) => Unit, unpersist: I => Unit,
+        read: String => I, wm: I => Long): (String => Unit, String => Long) =
+      (dir => { val i = build; try write(i, dir) finally unpersist(i) },
+        dir => { val i = read(dir); try wm(i) finally unpersist(i) })
+    val layouts = Seq(
+      "paragraph" -> roundTrip[ParagraphDedup.ParagraphIndex](
+        ParagraphDedup.buildParagraphIndex(corpus),
+        ParagraphDedup.writeParagraphIndex(_, _, 2), _.unpersist(),
+        ParagraphDedup.readParagraphIndex(spark, _), _.maxDocId),
+      "exact-substring" -> roundTrip[Dedup.ExactSubstrIndex](
+        Dedup.buildExactSubstrIndex(corpus, minLen = 3),
+        Dedup.writeExactSubstrIndex(_, _, 2), _.unpersist(),
+        Dedup.readExactSubstrIndex(spark, _), _.maxDocId),
+      "near-dup" -> roundTrip[Dedup.NearDupIndex](
+        Dedup.buildNearDupIndex(corpus),
+        Dedup.writeNearDupIndex(_, _, 2), _.unpersist(),
+        Dedup.readNearDupIndex(spark, _), _.maxDocId))
+    for ((layout, (write, readWm)) <- layouts) {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-prewm-$layout").toString
+      write(dir)
+      assert(readWm(dir) == 5L, s"$layout: watermark lost in the disk round-trip")
+      // rewrite meta/ as a writer from before the watermark left it
+      val meta = spark.read.parquet(s"$dir/meta").drop("max_doc_id")
+      val rows = meta.collect()
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), meta.schema)
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+      assert(readWm(dir) == IdContract.Unwatermarked,
+        s"$layout: a pre-watermark meta/ must reload unwatermarked")
+    }
+  }
+
   test("the one-shot convenience path stays unwatermarked: interleaved ids keep working") {
     // corpus ids ABOVE the increment's — exactly what the watermark
     // rejects, and exactly what the disjoint-id convenience contract

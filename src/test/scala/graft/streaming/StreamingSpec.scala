@@ -704,6 +704,39 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     finalIdx.unpersist(); fresh.unpersist(); idx0.unpersist()
   }
 
+  test("index-folding runner skips a replayed epoch whole: paragraph and near-dup twins") {
+    val sp = spark
+    import sp.implicits._
+    // foreachBatch is at-least-once: re-running an epoch the runner has
+    // already folded must neither re-probe (the advanced watermark would
+    // reject the batch's ids) nor re-sink nor re-fold
+    val longA = "alpha bravo charlie delta echo foxtrot golf hotel india " +
+      "juliet kilo lima mike november oscar papa"
+    val corpus = Seq((0L, s"$longA\n\nshared para")).toDF("doc_id", "text")
+    val batch = Seq((10L, s"$longA x\n\nshared para")).toDF("doc_id", "text")
+    def replay[I <: AnyRef](what: String, initial: I,
+        fold: ((org.apache.spark.sql.DataFrame, Long) => Unit) => IndexFold[I])
+        : I = {
+      var sunk = 0
+      val f = fold((out, _) => { out.count(); sunk += 1 })
+      f(batch, 0L)
+      val folded = f.current
+      assert(sunk == 1 && (folded ne initial), s"$what: first epoch must sink and fold")
+      f(batch, 0L) // the replay: must not throw
+      assert(sunk == 1, s"$what: a replayed epoch must sink nothing")
+      assert(f.current eq folded, s"$what: a replayed epoch must leave the index unchanged")
+      folded
+    }
+    val para0 = graft.pipeline.ParagraphDedup.buildParagraphIndex(corpus)
+    val para = replay("paragraph", para0, StreamingPipeline.paragraphFold(para0, _))
+    assert(para.maxDocId == 10L)
+    para.unpersist(); para0.unpersist()
+    val nd0 = graft.pipeline.Dedup.buildNearDupIndex(corpus)
+    val nd = replay("near-dup", nd0, StreamingPipeline.nearDupFold(nd0, 0.7, _))
+    assert(nd.maxDocId == 10L)
+    nd.unpersist(); nd0.unpersist()
+  }
+
   test("streaming exact-substring removal honors emitOriginal: pieces are original-byte slices, batch-equal") {
     val sp = spark
     import sp.implicits._

@@ -34,8 +34,9 @@ class PlanDump extends AnyFunSuite {
     sb.append("in round 14 with zero plan changes.\n")
     sb.append("Properties asserted programmatically in `PlanQualitySpec`.\n")
     // per-query renumbering: every `#<digits>` gets the index of its first
-    // appearance; `plan_id=<n>` likewise. Structure (operators, columns,
-    // pushed filters, join keys) is untouched.
+    // appearance; `plan_id=<n>` likewise; `[[D@<hash>` array identities
+    // become one fixed token. Structure (operators, columns, pushed
+    // filters, join keys) is untouched.
     def normalizeIds(plan: String): String = {
       val exprId = raw"#(\d+)(L|[a-z]*)?".r
       val seen = scala.collection.mutable.LinkedHashMap.empty[String, Int]
@@ -46,10 +47,12 @@ class PlanDump extends AnyFunSuite {
       })
       val planId = raw"plan_id=(\d+)".r
       val seenP = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-      planId.replaceAllIn(pass1, m => {
+      val pass2 = planId.replaceAllIn(pass1, m => {
         val k = seenP.getOrElseUpdate(m.group(1), seenP.size + 1)
         s"plan_id=p$k"
       })
+      // double-array literals print their JVM identity hash, new every session
+      pass2.replaceAll(raw"\[\[D@[0-9a-f]+", "[[D@array")
     }
     for (n <- names) {
       sb.append(s"\n## $n\n\n```\n")
